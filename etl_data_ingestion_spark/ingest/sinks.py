@@ -12,7 +12,16 @@ at-most-once gap, SURVEY.md §4.1).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
+
+
+def _tagged(df: DataFrame, load_id: str | Column) -> tuple[DataFrame, Observation]:
+    """``df`` with its ``_load_id`` set — one id for every row, or a
+    per-row column — observed for the number of rows written (no second
+    scan, no driver collect)."""
+    obs = Observation()
+    tag = load_id if isinstance(load_id, Column) else F.lit(load_id)
+    return df.withColumn("_load_id", tag).observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 class ParquetWarehouseSink:
@@ -46,15 +55,12 @@ class ParquetWarehouseSink:
                 f"Target table/path does not exist or is not accessible: {self.path}"
             )
 
-    def write(self, df: DataFrame, load_id: str) -> int:
-        """Append rows tagged with load_id; returns rows written,
-        counted via an Observation on the write itself (no second scan,
-        no driver collect)."""
-        obs = Observation(f"write:{load_id}")
+    def write(self, df: DataFrame, load_id: str | Column) -> int:
+        """Append rows tagged with load_id (a string, or a per-row
+        column); returns rows written."""
+        tagged, obs = _tagged(df, load_id)
         (
-            df.withColumn("_load_id", F.lit(load_id))
-            .observe(obs, F.count(F.lit(1)).alias("rows"))
-            .write.mode("append")
+            tagged.write.mode("append")
             .option("maxRecordsPerFile", self.batch_size)
             .parquet(self.path)
         )
@@ -100,12 +106,10 @@ class BigQueryWarehouseSink:
                 "use make_warehouse_sink() for guarded fallback"
             )
 
-    def write(self, df: DataFrame, load_id: str) -> int:
-        obs = Observation(f"write:{load_id}")
+    def write(self, df: DataFrame, load_id: str | Column) -> int:
+        tagged, obs = _tagged(df, load_id)
         (
-            df.withColumn("_load_id", F.lit(load_id))
-            .observe(obs, F.count(F.lit(1)).alias("rows"))
-            .write.format("bigquery")
+            tagged.write.format("bigquery")
             .mode("append")
             .option("table", self.table)
             .save()
@@ -163,12 +167,10 @@ class BucketedWarehouseSink:
         self.bucket_cols = list(bucket_cols)
         self.n_buckets = n_buckets
 
-    def write(self, df: DataFrame, load_id: str) -> int:
-        obs = Observation(f"write:{self.table}:{load_id}")
+    def write(self, df: DataFrame, load_id: str | Column) -> int:
+        tagged, obs = _tagged(df, load_id)
         (
-            df.withColumn("_load_id", F.lit(load_id))
-            .observe(obs, F.count(F.lit(1)).alias("rows"))
-            .write.mode("append")
+            tagged.write.mode("append")
             .bucketBy(self.n_buckets, *self.bucket_cols)
             .sortBy(*self.bucket_cols)
             .format("parquet")

@@ -11,11 +11,11 @@ itself (L2's lifecycle rename, driven by the engine not the app).
 Shape: the checkpointed text stream serves as the FILE-ARRIVAL LOG —
 ``foreachBatch`` reduces each micro-batch to its distinct
 ``input_file_name()`` set (files land atomically in one batch) and
-runs the SAME per-file ingest as the batch runner against the file
-still sitting in the watch dir (archival happens after the batch
-commits). Per-file policy (partial success, quarantine,
-notifications, isolation) is identical; the driver loop iterates
-file PATHS only — all row-level work stays in Spark jobs.
+hands it to the batch runner's ``drain_files`` against the files still
+sitting in the watch dir (archival happens after the batch commits),
+without the lifecycle renames. Per-file policy (partial success,
+quarantine, notifications, isolation) is therefore the batch runner's
+own; all row-level work stays in Spark jobs.
 """
 
 from __future__ import annotations
@@ -23,8 +23,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_data_ingestion_spark.ingest.pipeline import ingest_ctb_file
-from etl_data_ingestion_spark.ingest.runner import FileOutcome, RunReport
+from etl_data_ingestion_spark.ingest.runner import RunReport, drain_files
 from etl_data_ingestion_spark.ingest.sinks import ParquetWarehouseSink
 from etl_data_ingestion_spark.notify import Notifier
 
@@ -51,46 +50,10 @@ def run_landing_zone_stream(
     files = stream.select(F.input_file_name().alias("path"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        paths = [r["path"] for r in batch_df.distinct().collect()]
-        for path in sorted(paths):  # one entry per newly-landed file
-            filename = path.rsplit("/", 1)[-1]
-            try:
-                res = ingest_ctb_file(spark, path)
-                if not res.ok:
-                    notifier.error(filename, res.file_error)
-                    report.outcomes.append(
-                        FileOutcome(path, "failed", error=res.file_error)
-                    )
-                    continue
-                warehouse.check_target(spark)
-                q_rows = quarantine.write(res.quarantine, load_id=filename)
-                v_rows = warehouse.write(res.valid, load_id=filename)
-                if v_rows > 0:
-                    if q_rows == 0:
-                        notifier.success(filename, v_rows)
-                    else:
-                        notifier.error(
-                            filename,
-                            f"Inserted {v_rows} valid rows from '{filename}'; "
-                            f"{q_rows} rows quarantined with row-level errors.",
-                        )
-                    report.outcomes.append(
-                        FileOutcome(path, "processed", v_rows, q_rows)
-                    )
-                else:
-                    msg = (
-                        f"No valid data rows found in '{filename}' to insert "
-                        f"({q_rows} quarantined)."
-                    )
-                    notifier.error(filename, msg)
-                    report.outcomes.append(
-                        FileOutcome(path, "failed", 0, q_rows, error=msg)
-                    )
-            except Exception as e:  # per-file isolation (main.py:674-677)
-                notifier.error(filename, f"Unexpected error: {e}")
-                report.outcomes.append(
-                    FileOutcome(path, "failed", error=str(e))
-                )
+        paths = sorted(r["path"] for r in batch_df.distinct().collect())
+        report.outcomes.extend(
+            drain_files(spark, paths, warehouse, quarantine, notifier)
+        )
 
     q = (
         files.writeStream.foreachBatch(process_batch)

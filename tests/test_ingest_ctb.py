@@ -246,3 +246,17 @@ def test_canonical_name_examples():
     assert canonical_name("GATING M/B") == "MAKE_BUY"
     assert canonical_name("  SNAPSHOT_DATE  ") == "SNAPSHOT_DATE"
     assert canonical_name("weird col") == "WEIRD_COL"
+
+
+def test_int_overflow_rejects_row(spark, tmp_path):
+    # a digit string past the 64-bit range casts to NULL; it must be
+    # quarantined as unconvertible, not land as a valid NULL
+    big = "99999999999999999999"
+    text = header_line() + "\n" + row(DEMAND_QTY=big) + "\n" + row() + "\n"
+    res = ingest_ctb_file(spark, write_tsv(tmp_path, "ctb_overflow.tsv", text))
+    assert counts(res) == (1, 1)
+    q = res.quarantine.collect()[0]
+    assert q["_errors"] == [
+        f"Value error for column 'DEMAND_QTY': could not convert '{big}' "
+        "to INTEGER. Setting to None."
+    ]

@@ -110,6 +110,118 @@ def test_missing_target_fails_file(spark, zone, sinks):
     assert zone.list_unprocessed() == []
 
 
+def test_drain_jobs_do_not_grow_with_file_count(spark, tmp_path):
+    """Files sharing a header are read by one scan: a drain starts as
+    many Spark jobs for 8 data files as for 2."""
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (2, 8):
+        zone = LandingZone(spark, str(tmp_path / f"landing{n}"))
+        zone.ensure_dirs()
+        for i in range(n):
+            body = row() + "\n" + row(DEMAND_QTY="x") + "\n"
+            zone.put(f"CTB_{i}.tsv", (header_line() + "\n" + body).encode())
+        sinks = (
+            ParquetWarehouseSink(str(tmp_path / f"warehouse{n}")),
+            ParquetWarehouseSink(str(tmp_path / f"quarantine{n}")),
+        )
+        sc.setJobGroup(f"drain-{n}", f"drain of {n} files")
+        try:
+            report, _ = run(spark, zone, sinks)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert [(o.state, o.valid_rows, o.quarantined_rows) for o in report.outcomes] == [
+            ("processed", 1, 1)
+        ] * n
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(f"drain-{n}"))
+    assert jobs[2] > 0 and jobs[8] == jobs[2], jobs
+
+
+def test_row_failure_in_one_file_fails_only_that_file(spark, zone, sinks, monkeypatch):
+    """An execution-time error confined to one file's rows fails that
+    file alone; its group-mates are drained and counted as usual."""
+    import dataclasses
+
+    import pyspark.sql.functions as F
+
+    from etl_data_ingestion_spark.ingest import runner
+
+    read = runner.read_ctb_group
+
+    def poisoned(*a, **k):
+        group = read(*a, **k)
+        ok = F.coalesce(
+            F.assert_true(F.col("_load_id") != "CTB_bad.tsv").cast("boolean"),
+            F.lit(True),
+        )
+        return dataclasses.replace(
+            group,
+            rows=group.rows.filter(ok),
+            valid=group.valid.filter(ok),
+            quarantine=group.quarantine.filter(ok),
+        )
+
+    monkeypatch.setattr(runner, "read_ctb_group", poisoned)
+    zone.put("CTB_a.tsv", (header_line() + "\n" + row() + "\n" + row() + "\n").encode())
+    zone.put("CTB_bad.tsv", (header_line() + "\n" + row() + "\n").encode())
+    zone.put("CTB_c.tsv", (header_line() + "\n" + row() + "\n" + row(DEMAND_QTY="x") + "\n").encode())
+    report, notifier = run(spark, zone, sinks)
+    got = {
+        o.path.rsplit("/", 1)[-1]: (o.state, o.valid_rows, o.quarantined_rows)
+        for o in report.outcomes
+    }
+    assert got == {
+        "CTB_a.tsv": ("processed", 2, 0),
+        "CTB_bad.tsv": ("failed", 0, 0),
+        "CTB_c.tsv": ("processed", 1, 1),
+    }
+    bad = [e for e in notifier.events if e.subject.endswith("CTB_bad.tsv")]
+    assert len(bad) == 1 and "Unexpected error" in bad[0].body
+    wh = spark.read.parquet(sinks[0].path).groupBy("_load_id").count().collect()
+    assert dict(wh) == {"CTB_a.tsv": 2, "CTB_c.tsv": 1}
+    assert zone.list_unprocessed() == []
+
+
+def test_load_id_is_the_listed_name(spark, zone, sinks):
+    """A name the scan reports URI-encoded still lands under its own."""
+    name = "CTB a%20b%.tsv"
+    zone.put(name, (header_line() + "\n" + row() + "\n" + row() + "\n").encode())
+    report, _ = run(spark, zone, sinks)
+    o = report.outcomes[0]
+    assert (o.path.rsplit("/", 1)[-1], o.state, o.valid_rows) == (name, "processed", 2)
+    wh = spark.read.parquet(sinks[0].path)
+    assert [r[0] for r in wh.select("_load_id").collect()] == [name, name]
+
+
+def test_header_with_blank_lines_fails_no_data_rows(spark, zone, sinks):
+    zone.put("CTB_blank.tsv", (header_line() + "\n\n\t\t\n  \n\t\n").encode())
+    zone.put("CTB_ok.tsv", (header_line() + "\n" + row() + "\n").encode())
+    report, notifier = run(spark, zone, sinks)
+    assert [o.state for o in report.outcomes] == ["failed", "processed"]
+    blank = [e for e in notifier.events if e.subject.endswith("CTB_blank.tsv")]
+    assert len(blank) == 1 and "no data rows" in blank[0].body
+
+
+def test_drain_leaves_caller_conf_and_counts_ragged_rows(spark, zone, sinks):
+    """The ingest read runs with CSV column pruning off in a session of
+    its own: the caller's session keeps the default, and short and
+    long rows are still quarantined and counted."""
+    key = "spark.sql.csv.parser.columnPruning.enabled"
+    spark.conf.unset(key)
+    short = "\t".join(GOOD[c] for c in CANONICAL[:-1])
+    lines = [header_line(), row(), short, row() + "\textra"]
+    zone.put("CTB_ragged.tsv", ("\n".join(lines) + "\n").encode())
+    report, notifier = run(spark, zone, sinks)
+    assert spark.conf.get(key) == "true"
+    o = report.outcomes[0]
+    assert (o.state, o.valid_rows, o.quarantined_rows) == ("processed", 1, 2)
+    assert "2 rows quarantined" in notifier.events[0].body
+    q = spark.read.parquet(sinks[1].path).collect()
+    assert len(q) == 2
+    assert all(any("column count mismatch" in e for e in r["_errors"]) for r in q)
+
+
 def test_run_sql_interface(spark, sf_dir):
     """run_sql: the BigQuery-SQL replacement surface — ANSI SQL over
     the registered catalog, including a join and an aggregate."""
